@@ -415,12 +415,23 @@ def _measure_scale_curve(spark) -> dict:
         "growth": growth,
         "near_linear_slack": SCALE_NEAR_LINEAR_SLACK,
         "near_linear": near_linear,
-        "cpus": os.environ.get("SPARK_GRAFT_CPUS", "32"),
+        "session": _session_sizing(spark),
     }
     with open(SCALE_CURVE_PATH, "w") as fh:
         json.dump(out, fh, indent=1, sort_keys=True)
     print(f"# scale curve written: {SCALE_CURVE_PATH}")
     return out
+
+
+def _session_sizing(spark) -> dict:
+    """The parallelism and shuffle-partition count the session actually
+    resolved (session.get_spark's sizing rule plus any override)."""
+    return {
+        "default_parallelism": spark.sparkContext.defaultParallelism,
+        "shuffle_partitions": int(
+            spark.conf.get("spark.sql.shuffle.partitions")
+        ),
+    }
 
 
 def _embed_scale_curve(detail: dict) -> None:
@@ -881,6 +892,7 @@ def main() -> None:
             # [before, after] 1-min load averages let a reader attribute
             # any inflated timing to co-tenant work.
             "ambient_load": ambient,
+            "session": _session_sizing(spark),
             "load_final": _load_snapshot(),
             "query_load_1m": loads,
             # per-key co-tenant busy cores averaged over the (quietest)

@@ -34,9 +34,11 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-# Scan-definition cache, keyed by (application, sf_dir, name) like
-# rollups.shared_rollup (an applicationId key can never serve a
-# DataFrame bound to a dead JVM context). This is the metastore role:
+# Scan-definition cache, keyed by (application, sf_dir, name, file
+# stats) like rollups.shared_rollup (an applicationId key can never
+# serve a DataFrame bound to a dead JVM context; the (size, mtime) of
+# every file makes a rewritten table resolve afresh). This is the
+# metastore role:
 # a registered table's file listing + schema are resolved once per
 # session, not re-inferred by every query construction (guide §6 file
 # listing / §7.3 driver-side planning cost — measured 70-115 ms of
@@ -44,7 +46,7 @@ def table_path(sf_dir: str, name: str) -> str:
 # query invocation). NOTHING is persisted or precomputed: the cache
 # holds the unexecuted scan DataFrame (an immutable plan object);
 # every query still reads the parquet bytes and computes from scratch.
-_SCAN_CACHE: dict[tuple[str, str, str], DataFrame] = {}
+_SCAN_CACHE: dict[tuple, DataFrame] = {}
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -53,7 +55,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # Engine semantics are defined in UTC (matches the DuckDB oracle's naive
     # timestamps); pin it even when the caller's session was built elsewhere.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    key = (spark.sparkContext.applicationId, sf_dir, name)
+    key = (
+        spark.sparkContext.applicationId,
+        sf_dir,
+        name,
+        _file_stats(table_path(sf_dir, name)),
+    )
     df = _SCAN_CACHE.get(key)
     if df is None:
         df = _read_table(spark, sf_dir, name)
@@ -111,14 +118,21 @@ def _tz_normalized(df: DataFrame) -> DataFrame:
     return df
 
 
-def _input_bytes(path: str) -> int:
+def _file_stats(path: str) -> tuple[tuple[int, int], ...]:
+    """(size, mtime_ns) of every file under ``path``, in path order."""
     if os.path.isdir(path):
-        return sum(
-            os.path.getsize(os.path.join(root, f))
-            for root, _, files in os.walk(path)
-            for f in files
+        files = sorted(
+            os.path.join(root, f)
+            for root, _, names in os.walk(path)
+            for f in names
         )
-    return os.path.getsize(path)
+    else:
+        files = [path]
+    return tuple((st.st_size, st.st_mtime_ns) for st in map(os.stat, files))
+
+
+def _input_bytes(path: str) -> int:
+    return sum(size for size, _ in _file_stats(path))
 
 
 def load_table_spread(
@@ -142,15 +156,11 @@ def load_table_spread(
     conversion per call.)
 
     Round-10: the result rides the same scan-definition cache as
-    load_table (keyed additionally by the spread keys) — like the base
-    scan, it is an unexecuted immutable plan object.
+    load_table — like the base scan, it is an unexecuted immutable plan
+    object. Its key holds everything that decides the repartition: the
+    spread keys, maxPartitionBytes and the file stats (parallelism is
+    fixed for the application, which the key already names).
     """
-    key = (spark.sparkContext.applicationId, sf_dir, f"{name}|{keys}")
-    cached = _SCAN_CACHE.get(key)
-    if cached is not None:
-        return cached
-    df = load_table(spark, sf_dir, name)
-    target = spark.sparkContext.defaultParallelism
     try:
         max_bytes = int(
             spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
@@ -159,7 +169,20 @@ def load_table_spread(
         )
     except ValueError:
         max_bytes = 128 * 1024 * 1024
-    splits = max(1, _input_bytes(table_path(sf_dir, name)) // max_bytes)
+    stats = _file_stats(table_path(sf_dir, name))
+    key = (
+        spark.sparkContext.applicationId,
+        sf_dir,
+        f"{name}|{keys}",
+        max_bytes,
+        stats,
+    )
+    cached = _SCAN_CACHE.get(key)
+    if cached is not None:
+        return cached
+    df = load_table(spark, sf_dir, name)
+    target = spark.sparkContext.defaultParallelism
+    splits = max(1, sum(size for size, _ in stats) // max_bytes)
     if splits < target:
         df = df.repartition(target, *[F.col(k) for k in keys])
     _SCAN_CACHE[key] = df

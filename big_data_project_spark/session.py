@@ -4,6 +4,18 @@ Local mode is a single JVM; the same config flags (AQE, shuffle
 partitions, Arrow) are the ones that matter on a 1000-executor cluster —
 AQE handles runtime coalescing and skew joins, UTC keeps timestamp
 semantics identical to the oracle engine.
+
+Sizing rule: the core count is resolved once (``$SPARK_GRAFT_CPUS``, or
+the process CPU affinity when unset or ``*``) and sets both the
+``local[N]`` master and the default ``spark.sql.shuffle.partitions``;
+``$SPARK_GRAFT_SHUFFLE`` overrides the latter. That one value bounds
+every planned exchange, fixes the partition count of each persisted
+rollup and ``persisted()`` relation (AQE may not re-partition a cached
+plan, so every consumer scans it with that many tasks), and fixes the
+streaming state-store partition count at query start. One partition
+per core is scale-safe because this factory only ever builds
+``local[N]`` sessions: a cluster session is built elsewhere with its
+own conf, and a bigger local host gets proportionally more partitions.
 """
 
 from __future__ import annotations
@@ -15,6 +27,8 @@ from pyspark.sql import SparkSession
 
 def get_spark(app_name: str = "big_data_project_spark") -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
+    if cpus == "*":
+        cpus = str(len(os.sched_getaffinity(0)))
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -24,7 +38,7 @@ def get_spark(app_name: str = "big_data_project_spark") -> SparkSession:
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_MEM", "8g"))
         .config(
             "spark.sql.shuffle.partitions",
-            os.environ.get("SPARK_GRAFT_SHUFFLE", "32"),
+            os.environ.get("SPARK_GRAFT_SHUFFLE", cpus),
         )
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -452,6 +452,18 @@ def _dec_varint_at(buf: bytes, i: int) -> "tuple[int, int]":
         shift += 7
 
 
+def _skip_scalar(buf: bytes, i: int, wire: int) -> int:
+    """Index past the value of a non-length-delimited field: varint,
+    fixed64 or fixed32, as the reference _dec_fields skips them."""
+    if wire == _VARINT:
+        return _dec_varint_at(buf, i)[1]
+    if wire == _I64:
+        return i + 8
+    if wire == _I32:
+        return i + 4
+    raise ValueError(f"unsupported wire type {wire}")
+
+
 def _decode_trip_fast(buf: bytes) -> "tuple[str | None, str | None]":
     trip_id = route_id = None
     i, n = 0, len(buf)
@@ -466,14 +478,8 @@ def _decode_trip_fast(buf: bytes) -> "tuple[str | None, str | None]":
                 trip_id = v.decode()
             elif f == 5:
                 route_id = v.decode()
-        elif w == 0:
-            _, i = _dec_varint_at(buf, i)
-        elif w == 1:
-            i += 8
-        elif w == 5:
-            i += 4
         else:
-            raise ValueError(f"unsupported wire type {w}")
+            i = _skip_scalar(buf, i, w)
     return trip_id, route_id
 
 
@@ -524,17 +530,11 @@ def _decode_entity_fast(buf: bytes) -> tuple:
                                         bear = fv
                                     elif f3 == 5:
                                         speed = fv
-                                elif w3 == 0:
-                                    _, p = _dec_varint_at(v2, p)
                                 elif w3 == 2:
                                     l3, p = _dec_varint_at(v2, p)
                                     p += l3
-                                elif w3 == 1:
-                                    p += 8
                                 else:
-                                    raise ValueError(
-                                        f"unsupported wire type {w3}"
-                                    )
+                                    p = _skip_scalar(v2, p, w3)
                         elif f2 == 8:  # VehicleDescriptor
                             p, q = 0, len(v2)
                             while p < q:
@@ -545,17 +545,13 @@ def _decode_entity_fast(buf: bytes) -> tuple:
                                         vehicle_id = v2[p : p + l3].decode()
                                     p += l3
                                 else:
-                                    _, p = _dec_varint_at(v2, p)
+                                    p = _skip_scalar(v2, p, k3 & 7)
                     elif w2 == 0:
                         val, j = _dec_varint_at(v, j)
                         if f2 == 5:
                             vts = val
-                    elif w2 == 1:
-                        j += 8
-                    elif w2 == 5:
-                        j += 4
                     else:
-                        raise ValueError(f"unsupported wire type {w2}")
+                        j = _skip_scalar(v, j, w2)
             elif f == 3:  # TripUpdate
                 entity_kind = "trip_update"
                 n_stu = arr = dep = 0
@@ -593,34 +589,16 @@ def _decode_entity_fast(buf: bytes) -> tuple:
                                             elif k4 & 7 == 2:
                                                 l4, r = _dec_varint_at(v3, r)
                                                 r += l4
-                                            elif k4 & 7 == 1:
-                                                r += 8
-                                            elif k4 & 7 == 5:
-                                                r += 4
                                             else:
-                                                raise ValueError(
-                                                    "unsupported wire type"
-                                                )
-                                elif w3 == 0:
-                                    _, p = _dec_varint_at(v2, p)
-                                elif w3 == 1:
-                                    p += 8
-                                elif w3 == 5:
-                                    p += 4
+                                                r = _skip_scalar(v3, r, k4 & 7)
                                 else:
-                                    raise ValueError(
-                                        f"unsupported wire type {w3}"
-                                    )
+                                    p = _skip_scalar(v2, p, w3)
                     elif w2 == 0:
                         val, j = _dec_varint_at(v, j)
                         if f2 == 5:
                             delay = val
-                    elif w2 == 1:
-                        j += 8
-                    elif w2 == 5:
-                        j += 4
                     else:
-                        raise ValueError(f"unsupported wire type {w2}")
+                        j = _skip_scalar(v, j, w2)
             elif f == 5:  # Alert
                 entity_kind = "alert"
                 j, m = 0, len(v)
@@ -659,23 +637,13 @@ def _decode_entity_fast(buf: bytes) -> tuple:
                                                     ].decode()
                                                 r += l4
                                             else:
-                                                _, r = _dec_varint_at(v3, r)
+                                                r = _skip_scalar(v3, r, k4 & 7)
                                 else:
-                                    _, p = _dec_varint_at(v2, p)
-                    elif w2 == 1:
-                        j += 8
-                    elif w2 == 5:
-                        j += 4
+                                    p = _skip_scalar(v2, p, k3 & 7)
                     else:
-                        raise ValueError(f"unsupported wire type {w2}")
-        elif w == 0:
-            _, i = _dec_varint_at(buf, i)
-        elif w == 1:
-            i += 8
-        elif w == 5:
-            i += 4
+                        j = _skip_scalar(v, j, w2)
         else:
-            raise ValueError(f"unsupported wire type {w}")
+            i = _skip_scalar(buf, i, w)
     return (
         entity_kind, entity_id, trip_id, route_id, vehicle_id, lat, lon,
         bear, speed, vts, delay, n_stu, arr, dep, cause, effect, desc,
@@ -698,14 +666,8 @@ def _entities_frame(payloads) -> pd.DataFrame:
                 if f == 2:  # FeedEntity (header=1 skipped)
                     ap(_decode_entity_fast(buf[i : i + ln]))
                 i += ln
-            elif w == 0:
-                _, i = _dec_varint_at(buf, i)
-            elif w == 1:
-                i += 8
-            elif w == 5:
-                i += 4
             else:
-                raise ValueError(f"unsupported wire type {w}")
+                i = _skip_scalar(buf, i, w)
     cols = list(zip(*rows)) if rows else [[] for _ in _ENTITY_COLS]
     out = pd.DataFrame(dict(zip(_ENTITY_COLS, cols)), columns=_ENTITY_COLS)
     for c in (

@@ -185,9 +185,6 @@ def test_fast_wire_matches_reference():
     import pandas as pd
 
     from big_data_project_spark.sources.protofeed import (
-        _ENTITY_COLS,
-        _decode_entity,
-        _dec_fields,
         _enc_int,
         _enc_len,
         _encode_batch,
@@ -228,17 +225,57 @@ def test_fast_wire_matches_reference():
         )
     ref_payload = b"".join(parts)
     assert _encode_batch(b) == ref_payload
+    pd.testing.assert_frame_equal(
+        _entities_frame([ref_payload]), _reference_frame(ref_payload)
+    )
 
-    # reference decode: per-row dict walk
-    ref_rows = [
-        _decode_entity(v) for f, _w, v in _dec_fields(ref_payload) if f == 2
-    ]
-    ref = pd.DataFrame(ref_rows, columns=_ENTITY_COLS)
+
+def _reference_frame(payload: bytes) -> pd.DataFrame:
+    """Entity rows of one FeedMessage by the per-row reference decoder,
+    typed like the fast path's frame."""
+    from big_data_project_spark.sources.protofeed import (
+        _ENTITY_COLS,
+        _decode_entity,
+        _dec_fields,
+    )
+
+    ref = pd.DataFrame(
+        [_decode_entity(v) for f, _w, v in _dec_fields(payload) if f == 2],
+        columns=_ENTITY_COLS,
+    )
     for c in (
         "delay_seconds", "n_stop_updates", "sum_arrival_delay",
         "sum_departure_delay", "cause", "effect",
     ):
         ref[c] = pd.array(ref[c], dtype="Int64")
     ref["vehicle_ts"] = pd.to_datetime(ref["vehicle_ts"])
-    got = _entities_frame([ref_payload])
-    pd.testing.assert_frame_equal(got, ref)
+    return ref
+
+
+def test_fast_wire_skips_fixed_width_fields_in_submessages():
+    """Unknown fixed64 (wire 1) and fixed32 (wire 5) fields inside
+    VehicleDescriptor, TranslatedString and Translation are skipped by
+    width. Each payload reads as a bogus id or text if skipped as a
+    varint, so the fast path must still match the reference decoder."""
+    from big_data_project_spark.sources.protofeed import _entities_frame
+
+    decoy = _enc_len(1, b"bogus")
+    i64 = _enc_tag(9, 1) + b"\x00" + decoy
+    i32 = _enc_tag(9, 5) + b"\x00" + _enc_len(1, b"Z")
+    assert len(i64) == 1 + 8 and len(i32) == 1 + 4
+
+    descriptor = _enc_len(1, b"v1") + i64 + i32
+    vehicle = _enc_len(1, b"e0") + _enc_len(
+        4, _enc_int(5, 1_700_000_000) + _enc_len(8, descriptor)
+    )
+    translation = _enc_len(1, b"storm") + i64 + i32 + _enc_len(2, b"en")
+    translated = i64 + _enc_len(1, translation) + i32
+    alert = _enc_len(1, b"e2") + _enc_len(
+        5, _enc_int(6, 3) + _enc_len(10, translated)
+    )
+    payload = _enc_len(2, vehicle) + _enc_len(2, alert)
+
+    got = _entities_frame([payload])
+    pd.testing.assert_frame_equal(got, _reference_frame(payload))
+    assert got["vehicle_id"].tolist() == ["v1", None]
+    assert got["description"].tolist() == [None, "storm"]
