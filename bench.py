@@ -424,14 +424,32 @@ def _measure_scale_curve(spark) -> dict:
 
 
 def _session_sizing(spark) -> dict:
-    """The parallelism and shuffle-partition count the session actually
-    resolved (session.get_spark's sizing rule plus any override)."""
+    """The parallelism, shuffle-partition count and codegen class cache
+    size the session actually resolved (session.get_spark's sizing rule
+    plus any override)."""
     return {
         "default_parallelism": spark.sparkContext.defaultParallelism,
         "shuffle_partitions": int(
             spark.conf.get("spark.sql.shuffle.partitions")
         ),
+        "codegen_cache_max_entries": int(
+            spark.conf.get("spark.sql.codegen.cache.maxEntries")
+        ),
     }
+
+
+def _codegen_totals(spark) -> tuple[int, float]:
+    """(Janino compiles, compile ms) so far in this JVM: the count of
+    CodegenMetrics' compilation-time histogram, and CodeGenerator's
+    compile-time accumulator (exact nanoseconds; the histogram's
+    reservoir only samples durations)."""
+    jvm = spark._jvm
+    metric = jvm.org.apache.spark.metrics.source.CodegenMetrics
+    codegen = jvm.org.apache.spark.sql.catalyst.expressions.codegen
+    return (
+        int(metric.METRIC_COMPILATION_TIME().getCount()),
+        codegen.CodeGenerator.compileTime() / 1e6,
+    )
 
 
 def _embed_scale_curve(detail: dict) -> None:
@@ -719,16 +737,26 @@ def main() -> None:
             except Exception:  # noqa: BLE001 — diagnostics only
                 return -1
 
+        # Per-key Janino compiles in the cold pass (read outside the
+        # timed window): a steady-pass recompile shows up as a number
+        # rather than as unexplained driver time.
         cold: dict[str, float] = {}
         cache_regs: dict[str, int] = {}
+        cold_codegen: dict[str, dict] = {}
         for name in HEADLINE:
             c0 = _n_cached()
+            g0 = _codegen_totals(spark)
             t0 = time.perf_counter()
             run_once(name)
             cold[name] = round(time.perf_counter() - t0, 3)
+            g1 = _codegen_totals(spark)
             c1 = _n_cached()
             if c1 > c0 >= 0:
                 cache_regs[name] = c1 - c0
+            cold_codegen[name] = {
+                "compiles": g1[0] - g0[0],
+                "compile_ms": round(g1[1] - g0[1], 1),
+            }
 
         timings: dict[str, float] = {}
         loads: dict[str, list[float]] = {}
@@ -859,6 +887,7 @@ def main() -> None:
 
         detail = {
             "queries_cold": cold,
+            "cold_codegen": cold_codegen,
             "prior_round": prior_name,
             "vs_prior_ratio": ratios,
             "regressed_vs_prior": regressed,

@@ -14,6 +14,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .session import scoped_conf
+
 TABLES = (
     "region",
     "nation",
@@ -74,19 +76,12 @@ def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # the legacy long path, so surface it as a microsecond timestamp.
         # Floor division, NOT `div`: `div` truncates toward zero, which
         # would disagree with DuckDB's epoch_us flooring on pre-1970
-        # nanos. The conf is restored after the read (it is captured at
+        # nanos. The conf is scoped to the read (it is captured at
         # analysis time — verified: execution still succeeds) so other
         # nanos-parquet reads in the session keep default typing.
-        _CONF = "spark.sql.legacy.parquet.nanosAsLong"
-        prior = spark.conf.get(_CONF, None)
-        spark.conf.set(_CONF, "true")
-        try:
+        nanos = "spark.sql.legacy.parquet.nanosAsLong"
+        with scoped_conf(spark, nanos, "true"):
             df = spark.read.parquet(table_path(sf_dir, name))
-        finally:
-            if prior is None:
-                spark.conf.unset(_CONF)
-            else:
-                spark.conf.set(_CONF, prior)
         if isinstance(df.schema["ts"].dataType, T.LongType):
             df = df.withColumn(
                 "ts",

@@ -19,12 +19,16 @@ incrementally; in-process persist() keeps the same dataflow shape.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.storagelevel import StorageLevel
 
-_CACHE: dict[tuple[str, str, str], DataFrame] = {}
+from .catalog import TABLES, _file_stats, table_path
+
+# (application, sf_dir, name) -> (table file stats, persisted frame)
+_CACHE: dict[tuple[str, str, str], tuple[tuple, DataFrame]] = {}
 
 
 def shared_rollup(
@@ -33,16 +37,24 @@ def shared_rollup(
     name: str,
     build: Callable[[SparkSession, str], DataFrame],
 ) -> DataFrame:
-    """Memoized, persisted rollup keyed by (application, sf_dir, name).
+    """Memoized, persisted rollup keyed by (application, sf_dir, name)
+    and the (size, mtime) file stats of the catalog tables under sf_dir.
 
     The key includes ``applicationId`` so a restarted SparkContext never
-    serves DataFrames bound to a dead JVM context.
+    serves DataFrames bound to a dead JVM context; the file stats make a
+    table rewritten in place (a new hour landing in a long-lived
+    session) rebuild the rollup, unpersisting the superseded frame.
     """
     key = (spark.sparkContext.applicationId, sf_dir, name)
-    df = _CACHE.get(key)
-    if df is None:
-        df = build(spark, sf_dir).persist(StorageLevel.MEMORY_AND_DISK)
-        _CACHE[key] = df
+    paths = [table_path(sf_dir, t) for t in TABLES]
+    stats = tuple(_file_stats(p) if os.path.exists(p) else None for p in paths)
+    hit = _CACHE.get(key)
+    if hit is not None and hit[0] == stats:
+        return hit[1]
+    if hit is not None:
+        hit[1].unpersist()
+    df = build(spark, sf_dir).persist(StorageLevel.MEMORY_AND_DISK)
+    _CACHE[key] = (stats, df)
     return df
 
 
@@ -51,7 +63,7 @@ def clear_rollup_cache() -> int:
     Returns the number of entries dropped so release_caches() can count
     the memo tier alongside its tracked handles."""
     n = len(_CACHE)
-    for df in _CACHE.values():
+    for _, df in _CACHE.values():
         try:
             df.unpersist()
         except Exception:

@@ -32,3 +32,10 @@ def duck():
         )
     yield con
     con.close()
+
+
+def codegen_compiles(spark) -> int:
+    """Janino compiles so far in this JVM (the count of Spark's
+    CodegenMetrics compilation-time histogram)."""
+    metric = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metric.METRIC_COMPILATION_TIME().getCount())

@@ -13,6 +13,7 @@ from big_data_project_spark.catalog import (
     load_table_spread,
     table_path,
 )
+from big_data_project_spark.session import scoped_conf
 
 from tests.conftest import SF_DIR
 
@@ -24,15 +25,6 @@ def _copy_documents(tmp_path) -> str:
     os.makedirs(d)
     shutil.copy(table_path(SF_DIR, "documents"), table_path(d, "documents"))
     return d
-
-
-def _with_max_bytes(spark, value, fn):
-    prior = spark.conf.get(_CONF)
-    spark.conf.set(_CONF, value)
-    try:
-        return fn()
-    finally:
-        spark.conf.set(_CONF, prior)
 
 
 def test_spread_unchanged_call_hits_cache(spark, tmp_path):
@@ -48,9 +40,8 @@ def test_spread_decision_follows_max_partition_bytes(spark, tmp_path):
     d = _copy_documents(tmp_path)
     base = load_table(spark, d, "documents")
     assert load_table_spread(spark, d, "documents", "doc_id") is not base
-    spread = _with_max_bytes(
-        spark, "1", lambda: load_table_spread(spark, d, "documents", "doc_id")
-    )
+    with scoped_conf(spark, _CONF, "1"):
+        spread = load_table_spread(spark, d, "documents", "doc_id")
     assert spread is base
 
 
@@ -64,14 +55,15 @@ def test_spread_decision_follows_rewritten_parquet(spark, tmp_path):
     max_bytes = str(os.path.getsize(path) // target)
 
     def spread():
-        return load_table_spread(spark, d, "documents", "doc_id")
+        with scoped_conf(spark, _CONF, max_bytes):
+            return load_table_spread(spark, d, "documents", "doc_id")
 
-    before = _with_max_bytes(spark, max_bytes, spread)
+    before = spread()
     assert before is load_table(spark, d, "documents")
 
     full = pq.read_table(path)
     half = full.slice(0, full.num_rows // 2)
     pq.write_table(half, path)
-    after = _with_max_bytes(spark, max_bytes, spread)
+    after = spread()
     assert after is not load_table(spark, d, "documents")
     assert after.count() == half.num_rows

@@ -22,6 +22,7 @@ from big_data_project_spark.operators import (
     trend,
     vectorops,
 )
+from big_data_project_spark.session import scoped_conf
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -453,16 +454,12 @@ def test_compact_parquet_reduces_files_keeps_rows(spark, tmp_path):
     # DataFrameReader option — the .option() form is silently ignored)
     # so the zero-padded values are verified as the exact strings.
     conf = "spark.sql.sources.partitionColumnTypeInference.enabled"
-    prior = spark.conf.get(conf)
-    spark.conf.set(conf, "false")
-    try:
+    with scoped_conf(spark, conf, "false"):
         got = spark.read.parquet(p2)
         assert got.count() == 1000
         assert sorted(
             r["pd"] for r in got.select("pd").distinct().collect()
         ) == ["00", "01", "02"]
-    finally:
-        spark.conf.set(conf, prior)
 
 
 def test_compact_parquet_all_null_partition(spark, tmp_path):
